@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
+from graphit_spark.plans.fixpoint import iterate
 from graphit_spark.plans.state import fresh_checkpoint
 from graphit_spark.kernels.scc import (
     _JUMP_FROM,
@@ -55,13 +56,12 @@ from graphit_spark.plans.traversal import choose_direction
 def _reachable(
     edges: DataFrame,
     seeds: DataFrame,
-    seed_count: int,
     num_edges: int,
     num_verts: int,
     max_iters: int,
 ) -> DataFrame:
     """All vertex ids reachable from `seeds` along directed `edges`,
-    seeds included. Returns a localCheckpointed single-column ``id``
+    seeds included. Returns a checkpointed single-column ``id``
     DataFrame the caller must unpersist.
 
     Min-KEY label propagation with pointer-jump shortcutting (the
@@ -92,20 +92,20 @@ def _reachable(
         .unionByName(seeds.select("id"))
         .distinct()
     )
-    state = (
-        univ.join(seeds.select("id", F.lit(1).alias("seed")), "id", "left")
-        .select("id", key.alias("lab"))
-        .transform(fresh_checkpoint)
-    )
-    front = state
-    fsize = num_verts  # first round: everyone sends
-    for rnd in range(max_iters):
-        direction = choose_direction(fsize, int(fsize * avg_deg), num_edges)
+    # the frontier: rows whose label the last round lowered; round 0
+    # has everyone sending, which the direction rule always plans dense
+    fsize = {"n": num_verts}
+
+    def step(state: DataFrame, rnd: int) -> DataFrame:
+        n = fsize["n"]
+        direction = choose_direction(n, int(n * avg_deg), num_edges)
         src_labels = state.select(
             F.col("id").alias("src"), F.col("lab").alias("slab")
         )
         if direction == "sparse":
-            fr = front.select(F.col("id").alias("src"))
+            fr = state.filter(F.col("lab") < F.col("olab")).select(
+                F.col("id").alias("src")
+            )
             active = edges.join(F.broadcast(fr), "src", "left_semi")
             src_labels = F.broadcast(src_labels.join(F.broadcast(fr), "src"))
         else:
@@ -120,6 +120,8 @@ def _reachable(
             F.col("lab").alias("olab"),
             F.least("lab", F.coalesce("cand", "lab")).alias("lab"),
         )
+        if rnd < _JUMP_FROM:
+            return gath
         # pointer jump: vertex(lab) = lab + num_verts when lab is a
         # seed key, lab otherwise; seeds' own labels are already
         # minimal, so jumping through them is a no-op by construction.
@@ -128,45 +130,37 @@ def _reachable(
         # the gather), so the join side shrinks with the frontier; and
         # like the SCC fixpoint, jumps only engage past _JUMP_FROM
         # rounds, so shallow reaches never pay the extra join.
-        if rnd >= _JUMP_FROM:
-            jmp = gath.filter(F.col("lab") < F.col("olab")).select(
-                F.col("id").alias("jid"), F.col("lab").alias("jlab")
-            )
-            vertex_of = F.when(
-                F.col("lab") < 0, F.col("lab") + F.lit(num_verts)
-            ).otherwise(F.col("lab"))
-            new_state = (
-                gath.join(jmp, vertex_of == jmp["jid"], "left")
-                .select(
-                    "id",
-                    "olab",
-                    F.least(
-                        F.col("lab"), F.coalesce("jlab", F.col("lab"))
-                    ).alias("lab"),
-                )
-                .transform(fresh_checkpoint)
-            )
-        else:
-            new_state = gath.transform(fresh_checkpoint)
-        changed = new_state.filter(F.col("lab") < F.col("olab"))
-        fsize = changed.count()
-        if front is not state:
-            front.unpersist()
-        state.unpersist()
-        state = new_state.select("id", "lab")
-        front = new_state.filter(F.col("lab") < F.col("olab")).select("id")
-        if fsize == 0:
-            reached = (
-                state.filter(F.col("lab") < 0)
-                .select("id")
-                .transform(fresh_checkpoint)
-            )
-            new_state.unpersist()
-            return reached
-    raise RuntimeError(
-        f"reachability fixpoint did not converge within {max_iters} "
-        "rounds — raise max_iters above the graph's directed diameter"
+        jmp = gath.filter(F.col("lab") < F.col("olab")).select(
+            F.col("id").alias("jid"), F.col("lab").alias("jlab")
+        )
+        vertex_of = F.when(
+            F.col("lab") < 0, F.col("lab") + F.lit(num_verts)
+        ).otherwise(F.col("lab"))
+        return gath.join(jmp, vertex_of == jmp["jid"], "left").select(
+            "id",
+            "olab",
+            F.least(F.col("lab"), F.coalesce("jlab", F.col("lab"))).alias("lab"),
+        )
+
+    def changed(state: DataFrame) -> int:
+        fsize["n"] = state.filter(F.col("lab") < F.col("olab")).count()
+        return fsize["n"]
+
+    init = univ.join(seeds.select("id", F.lit(1).alias("seed")), "id", "left").select(
+        "id", key.alias("lab")
     )
+    fix = iterate(step, init, range(max_iters), measure=changed)
+    if not fix.converged:
+        fix.state.unpersist()
+        raise RuntimeError(
+            f"reachability fixpoint did not converge within {max_iters} "
+            "rounds — raise max_iters above the graph's directed diameter"
+        )
+    reached = (
+        fix.state.filter(F.col("lab") < 0).select("id").transform(fresh_checkpoint)
+    )
+    fix.state.unpersist()
+    return reached
 
 
 def bowtie_classes(
@@ -180,17 +174,15 @@ def bowtie_classes(
     num_edges = graph.num_edges
     num_verts = graph.num_vertices
 
-    scc = strongly_connected_components(graph, **scc_kw).localCheckpoint(
-        eager=True
-    )
-    core_row = (
+    # the SCC result owns its checkpointed parts: read it in place,
+    # release it once the core is extracted
+    scc = strongly_connected_components(graph, **scc_kw)
+    core_label = int(
         scc.groupBy("scc")
         .count()
         .orderBy(F.desc("count"), F.asc("scc"))
-        .first()
+        .first()["scc"]
     )
-    core_label = int(core_row["scc"])
-    core_size = int(core_row["count"])
     corev = (
         scc.filter(F.col("scc") == core_label)
         .select("id")
@@ -203,13 +195,12 @@ def bowtie_classes(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     ).transform(fresh_checkpoint)
 
-    fwd = _reachable(edges, corev, core_size, num_edges, num_verts, max_iters)
-    bwd = _reachable(tedges, corev, core_size, num_edges, num_verts, max_iters)
+    fwd = _reachable(edges, corev, num_edges, num_verts, max_iters)
+    bwd = _reachable(tedges, corev, num_edges, num_verts, max_iters)
     inn = bwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
     outt = fwd.join(corev, "id", "left_anti").transform(fresh_checkpoint)
-    n_in, n_out = inn.count(), outt.count()
-    fi = _reachable(edges, inn, n_in, num_edges, num_verts, max_iters)
-    bo = _reachable(tedges, outt, n_out, num_edges, num_verts, max_iters)
+    fi = _reachable(edges, inn, num_edges, num_verts, max_iters)
+    bo = _reachable(tedges, outt, num_edges, num_verts, max_iters)
 
     def flag(df: DataFrame, name: str) -> DataFrame:
         return df.select("id", F.lit(True).alias(name))

@@ -21,12 +21,10 @@ turning O(diameter) propagation into O(log n) rounds on long chains.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphit_spark.graph import LinkGraph
+from graphit_spark.plans.fixpoint import iterate
 from graphit_spark.plans.state import fresh_checkpoint
 from graphit_spark.checkpoint import SnapshotStore
 from graphit_spark.plans.traversal import choose_direction
@@ -34,6 +32,47 @@ from graphit_spark.plans.traversal import choose_direction
 # pointer-jump parent maps up to this many distinct labels are broadcast;
 # above it the jump is skipped for the round (propagation still converges)
 _PJ_BROADCAST_LIMIT = 1_000_000
+
+
+def _pointer_jump(labels: DataFrame) -> DataFrame:
+    """Path-halving over (id, comp, old_comp): comp[v] <- comp[comp[v]],
+    twice (cc_lp_pj.gt:21-28). A naive self-join on comp shuffles the
+    whole table keyed by the giant component's label — maximal key skew.
+    Instead the parent mapping is restricted to the DISTINCT label values
+    (they collapse geometrically) and broadcast, so each hop is one
+    narrow V-scan: no shuffle, no skewed key. Each hop references its
+    input twice (as parent map and as left side), so every hop input is
+    checkpointed first (the gather lazily: the distinct-label
+    checkpoint reads all of it); returns the last hop's checkpoint,
+    intermediate ones released."""
+    labels = fresh_checkpoint(labels, eager=False)
+    dcomp = (
+        labels.select(F.col("comp").alias("pid"))
+        .distinct()
+        .transform(fresh_checkpoint)
+    )
+    if dcomp.count() <= _PJ_BROADCAST_LIMIT:
+        for _ in range(2):
+            parent = F.broadcast(
+                labels.join(
+                    F.broadcast(dcomp), labels["id"] == dcomp["pid"]
+                ).select("pid", F.col("comp").alias("pcomp"))
+            )
+            left = labels.alias("l")
+            hop = left.join(
+                parent, F.col("l.comp") == F.col("pid"), "left"
+            ).select(
+                F.col("l.id").alias("id"),
+                F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
+                F.col("l.old_comp").alias("old_comp"),
+            ).transform(fresh_checkpoint)
+            labels.unpersist()
+            labels = hop
+    # else: labels haven't consolidated yet — plain propagation
+    # continues and PJ kicks in once distinct labels fit a
+    # broadcast (power-law graphs get there in 1-2 rounds).
+    dcomp.unpersist()
+    return labels
 
 
 def connected_components(
@@ -71,7 +110,6 @@ def connected_components(
     if resume and store is not None and store.latest() is not None:
         start_iter = store.latest() + 1
         labels = store.read(g.spark, store.latest())
-        frontier = labels.select("id")  # conservative: all active
     elif init_labels is not None:
         # Warm start for EDGE-ADDITION deltas: min-label propagation
         # from any per-vertex upper bound of the final component min
@@ -86,24 +124,31 @@ def connected_components(
             .join(init_labels.select("id", "comp"), "id", "left")
             .select("id", F.coalesce("comp", "id").alias("comp"))
         )
-        frontier = labels.select("id")  # conservative: all active
     else:
         labels = graph.vertices().select("id", F.col("id").alias("comp"))
-        frontier = labels.select("id")
-    labels = labels.transform(fresh_checkpoint)
-    frontier_size = graph.num_vertices
-    # degree sum of full frontier = num_edges (dense round 0)
-    frontier_deg_sum = num_edges
 
     # same strategy choice as kernels/pagerank.py: the V-sized label side
     # joins the cached edge partitioning via per-partition hash build
     # (no E-sized sort, no driver broadcast build)
     big_v = graph.num_vertices > 500_000
-    prev_ck = labels
+    # The frontier is the previous round's changed vertices
+    # (applyModified contract); round 0 (and a resume or warm start,
+    # conservatively) has every vertex active, which the direction rule
+    # always plans dense. The degree sum only decides sparse-vs-dense
+    # when the frontier SIZE alone is below the Ligra threshold —
+    # compute the V-sized degree join only then (the frontier is small,
+    # so the join is too); a big frontier is dense regardless.
+    front = {"ids": None, "size": graph.num_vertices, "deg": num_edges}
 
-    for i in range(start_iter, max_iters):
-        t0 = time.time()
-        direction = choose_direction(frontier_size, frontier_deg_sum, num_edges)
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        size = front["size"]
+        if front["deg"] is None:
+            front["deg"] = num_edges if size > num_edges / 20 else int(
+                front["ids"].join(g.out_degrees(), "id", "left")
+                .agg(F.coalesce(F.sum("out_degree"), F.lit(0)).alias("d"))
+                .collect()[0]["d"]
+            )
+        direction = front["direction"] = choose_direction(size, front["deg"], num_edges)
         src_labels = labels.select(F.col("id").alias("src"), "comp")
         # Frontier restriction lives on the V-sized LABEL side, never as a
         # separate E-sized semi-join: the inner gather join below already
@@ -112,14 +157,14 @@ def connected_components(
         if direction == "sparse":
             # push-like: broadcast-prune the edge scan with the small
             # frontier, and broadcast the (equally small) label rows.
-            fr = frontier.select(F.col("id").alias("src"))
+            fr = front["ids"].select(F.col("id").alias("src"))
             active_edges = g.edges.join(F.broadcast(fr), "src", "left_semi")
             src_labels = F.broadcast(src_labels.join(F.broadcast(fr), "src"))
         else:
             active_edges = g.edges
-            if frontier_size < graph.num_vertices:
+            if size < graph.num_vertices:
                 src_labels = src_labels.join(
-                    frontier.select(F.col("id").alias("src")), "src", "left_semi"
+                    front["ids"].select(F.col("id").alias("src")), "src", "left_semi"
                 )
             if big_v:
                 src_labels = src_labels.hint("shuffle_hash")
@@ -128,96 +173,26 @@ def connected_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("comp").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(mins, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias(
-                    "comp"
-                ),
-                F.col("comp").alias("old_comp"),
-            )
+        new_labels = labels.join(mins, "id", "left").select(
+            "id",
+            F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias("comp"),
+            F.col("comp").alias("old_comp"),
         )
-        # materialize the gather ONCE before pointer jumping: each jump
-        # hop references new_labels twice (as parent map and as left
-        # side), so a lazy chain would recompute the E-sized gather
-        # several times per round
-        new_labels = new_labels.transform(fresh_checkpoint)
-        round_cks = [new_labels]
-        if pointer_jump:
-            # Path-halving: comp[v] <- comp[comp[v]], repeated. A naive
-            # self-join on comp shuffles the whole table keyed by the
-            # giant component's label — maximal key skew. Instead the
-            # parent mapping is restricted to the DISTINCT label values
-            # (they collapse geometrically) and broadcast, so each hop is
-            # one narrow V-scan: no shuffle, no skewed key.
-            dcomp = (
-                new_labels.select(F.col("comp").alias("pid"))
-                .distinct()
-                .transform(fresh_checkpoint)
-            )
-            if dcomp.count() <= _PJ_BROADCAST_LIMIT:
-                for _ in range(2):
-                    parent = F.broadcast(
-                        new_labels.join(
-                            F.broadcast(dcomp),
-                            new_labels["id"] == dcomp["pid"],
-                        ).select("pid", F.col("comp").alias("pcomp"))
-                    )
-                    left = new_labels.alias("l")
-                    new_labels = left.join(
-                        parent, F.col("l.comp") == F.col("pid"), "left"
-                    ).select(
-                        F.col("l.id").alias("id"),
-                        F.coalesce(F.col("pcomp"), F.col("l.comp")).alias("comp"),
-                        F.col("l.old_comp").alias("old_comp"),
-                    ).transform(fresh_checkpoint)
-                    round_cks.append(new_labels)
-            # else: labels haven't consolidated yet — plain propagation
-            # continues and PJ kicks in once distinct labels fit a
-            # broadcast (power-law graphs get there in 1-2 rounds).
-            dcomp.unpersist()
-        for ck in round_cks[:-1]:
-            ck.unpersist()
-        changed = new_labels.filter(F.col("comp") != F.col("old_comp")).select("id")
-        # next frontier = changed vertices (applyModified contract).
-        # The degree sum only decides sparse-vs-dense when the frontier
-        # SIZE alone is below the Ligra threshold — compute the V-sized
-        # degree join only then (the frontier is small, so the join is
-        # too); a big frontier is dense regardless.
-        frontier_size = changed.count()
-        if frontier_size > num_edges / 20:
-            frontier_deg_sum = num_edges  # dense either way
-        else:
-            frontier_deg_sum = int(
-                changed.join(g.out_degrees(), "id", "left")
-                .agg(F.coalesce(F.sum("out_degree"), F.lit(0)).alias("d"))
-                .collect()[0]["d"]
-            )
-        if store is not None:
-            store.write(
-                new_labels.select("id", "comp"),
-                i,
-                {
-                    "kernel": "cc",
-                    "elapsed_sec": time.time() - t0,
-                    "frontier_size": frontier_size,
-                    "direction": direction,
-                },
-            )
-        # release the superseded V-sized checkpoint (bounded memory over
-        # O(log n) rounds; same discipline as kernels/pagerank.py)
-        if prev_ck is not None:
-            prev_ck.unpersist()
-        prev_ck = new_labels
-        labels = new_labels.select("id", "comp")
-        frontier = changed
-        if metrics_out is not None:
-            metrics_out["iterations"] = i + 1 - start_iter
-            metrics_out["final_frontier"] = frontier_size
-        if frontier_size == 0:
-            break
+        # the gather is materialized ONCE before pointer jumping, so the
+        # hops do not recompute the E-sized gather
+        return _pointer_jump(new_labels) if pointer_jump else new_labels
 
+    def changed(labels: DataFrame) -> int:
+        front["ids"] = labels.filter(F.col("comp") != F.col("old_comp")).select("id")
+        front["size"], front["deg"] = front["ids"].count(), None
+        return front["size"]
+
+    run = iterate(
+        step, labels, range(start_iter, max_iters), measure=changed,
+        store=store, kernel="cc", snapshot=("id", "comp"),
+        record=lambda n: {"frontier_size": n, "direction": front["direction"]},
+        metrics_out=metrics_out, final_key="final_frontier",
+    )
     if own_cache:
         g.unpersist()
-    return labels.select("id", "comp")
+    return run.state.select("id", "comp")

@@ -21,11 +21,27 @@ window over the full vertex set needed).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import Column, DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.fixpoint import iterate
+
+
+def _best_label(g: LinkGraph, labels: DataFrame, vote: Column) -> DataFrame:
+    """(id, best_label): the neighbor label with the largest total
+    ``vote`` per vertex, ties to the smallest label — argmax by
+    (vote desc, label asc) as max_by over struct(vote, -label), so both
+    levels stay native map-side-combined aggregations."""
+    votes = (
+        g.edges.join(labels.select(F.col("id").alias("src"), "label"), "src")
+        .groupBy(F.col("dst").alias("id"), "label")
+        .agg(vote.alias("votes"))
+    )
+    return votes.groupBy("id").agg(
+        F.max_by(
+            "label", F.struct(F.col("votes"), (-F.col("label")).alias("neg"))
+        ).alias("best_label")
+    )
 
 
 def label_propagation(
@@ -44,8 +60,6 @@ def label_propagation(
     only the remaining rounds — LPA is a fixed-round synchronous
     recurrence, so replaying from round k is byte-identical to an
     uninterrupted run (integer argmax, no float wobble)."""
-    import time as _time
-
     g = graph.symmetrize() if symmetrize else graph
     own_cache = g.ensure_persisted()
 
@@ -53,45 +67,19 @@ def label_propagation(
     if resume and store is not None and store.latest() is not None:
         start_round = store.latest() + 1
         labels = store.read(g.spark, store.latest()).select("id", "label")
-        labels = labels.transform(fresh_checkpoint)
     else:
         labels = graph.vertices().select("id", F.col("id").alias("label"))
-        labels = labels.transform(fresh_checkpoint)
-    prev = labels  # superseded checkpoints released per round
 
-    for it in range(start_round, rounds):
-        t0 = _time.time()
-        counts = (
-            g.edges.join(
-                labels.select(F.col("id").alias("src"), "label"), "src"
-            )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.count("*").alias("cnt"))
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        best = _best_label(g, labels, F.count("*"))
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce("best_label", "label").alias("label")
         )
-        # argmax by (cnt desc, label asc): max_by over struct(cnt, -label)
-        best = counts.groupBy("id").agg(
-            F.max_by("label", F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias(
-                "best_label"
-            )
-        )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("best_label", "label").alias("label"))
-            .transform(fresh_checkpoint)
-        )
-        labels = new_labels
-        if store is not None:
-            store.write(
-                labels,
-                it,
-                {"kernel": "lpa", "elapsed_sec": _time.time() - t0},
-            )
-        prev.unpersist()
-        prev = labels
 
+    run = iterate(step, labels, range(start_round, rounds), store=store, kernel="lpa")
     if own_cache:
         g.unpersist()
-    return labels
+    return run.state
 
 
 def weighted_label_propagation(
@@ -120,36 +108,17 @@ def weighted_label_propagation(
     g = graph.symmetrize() if symmetrize else graph
     own_cache = g.ensure_persisted()
 
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        best = _best_label(g, labels, F.sum("weight"))
+        return labels.join(best, "id", "left").select(
+            "id", F.coalesce("best_label", "label").alias("label")
+        )
+
     labels = graph.vertices().select("id", F.col("id").alias("label"))
-    labels = labels.transform(fresh_checkpoint)
-    prev = labels  # superseded checkpoints released per round
-
-    for _ in range(rounds):
-        votes = (
-            g.edges.join(
-                labels.select(F.col("id").alias("src"), "label"), "src"
-            )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.sum("weight").alias("w"))
-        )
-        best = votes.groupBy("id").agg(
-            F.max_by(
-                "label",
-                F.struct(F.col("w"), (-F.col("label")).alias("neg")),
-            ).alias("best_label")
-        )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("best_label", "label").alias("label"))
-            .transform(fresh_checkpoint)
-        )
-        labels = new_labels
-        prev.unpersist()
-        prev = labels
-
+    run = iterate(step, labels, range(rounds))
     if own_cache:
         g.unpersist()
-    return labels
+    return run.state
 
 
 def label_spreading(
@@ -186,44 +155,26 @@ def label_spreading(
         F.col("id").cast("long").alias("id"),
         F.col("label").cast("long").alias("seed_label"),
     )
-    labels = (
-        graph.vertices()
-        .join(seed_map, "id", "left")
-        .select("id", F.col("seed_label").alias("label"))
-        .transform(fresh_checkpoint)
-    )
-    prev = labels
-    for _ in range(rounds):
-        counts = (
-            g.edges.join(
-                labels.filter(F.col("label").isNotNull()).select(
-                    F.col("id").alias("src"), "label"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.count("*").alias("cnt"))
+
+    def step(labels: DataFrame, _i: int) -> DataFrame:
+        best = _best_label(
+            g, labels.filter(F.col("label").isNotNull()), F.count("*")
         )
-        best = counts.groupBy("id").agg(
-            F.max_by(
-                "label",
-                F.struct(F.col("cnt"), (-F.col("label")).alias("neg")),
-            ).alias("best_label")
-        )
-        labels = (
+        return (
             labels.join(seed_map, "id", "left")
             .join(best, "id", "left")
             .select(
                 "id",
-                F.coalesce("seed_label", "best_label", "label").alias(
-                    "label"
-                ),
+                F.coalesce("seed_label", "best_label", "label").alias("label"),
             )
-            .transform(fresh_checkpoint)
         )
-        prev.unpersist()
-        prev = labels
 
+    labels = (
+        graph.vertices()
+        .join(seed_map, "id", "left")
+        .select("id", F.col("seed_label").alias("label"))
+    )
+    run = iterate(step, labels, range(rounds))
     if own_cache:
         g.unpersist()
-    return labels
+    return run.state

@@ -46,7 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graphit_spark.graph import LinkGraph
-from graphit_spark.plans.state import fresh_checkpoint
+from graphit_spark.plans.fixpoint import Fixpoint, iterate
+from graphit_spark.plans.state import fresh_checkpoint, union_checkpoints
 from graphit_spark.plans.traversal import choose_direction
 
 
@@ -63,37 +64,32 @@ def _fw_bw_fixpoint(
     num_verts: int,
     big_v: bool,
     max_iters: int,
-) -> tuple[DataFrame, bool]:
-    """((id, flab, blab), converged): joint fixpoint of
-    lab[dst] min= lab[src] over `edges` (flab) and `tedges` (blab),
-    both starting from lab = id. One checkpoint + one count action per
-    round covers both directions."""
+) -> Fixpoint:
+    """Joint fixpoint of lab[dst] min= lab[src] over `edges` (flab) and
+    `tedges` (blab), both starting from lab = id; the state is
+    (id, flab, blab, fchg, bchg), the flags marking this round's
+    changes. One checkpoint + one count action per round covers both
+    directions. Returns the driver's Fixpoint: its state is the bound
+    final checkpoint."""
     avg_deg = max(num_edges / max(num_verts, 1), 1.0)
-    state = verts.select(
-        "id", F.col("id").alias("flab"), F.col("id").alias("blab")
-    ).transform(fresh_checkpoint)
-    ffront = state.select("id")
-    bfront = ffront
-    fsize = bsize = num_verts
-    f_done = b_done = False
-    prev = state
+    # changed-row count per direction; a direction that changed nothing
+    # is done (its labels stay put, so it stays at 0)
+    sizes = {"flab": num_verts, "blab": num_verts}
 
-    def gather(e: DataFrame, labcol: str, front: DataFrame, size: int,
-               tag: str) -> DataFrame:
+    def gather(state: DataFrame, e: DataFrame, labcol: str, tag: str) -> DataFrame:
+        size = sizes[labcol]
         direction = choose_direction(size, int(size * avg_deg), num_edges)
         src_labels = state.select(
             F.col("id").alias("src"), F.col(labcol).alias("lab")
         )
+        front = state.filter(f"{tag}chg").select(F.col("id").alias("src"))
         if direction == "sparse":
-            fr = front.select(F.col("id").alias("src"))
-            active = e.join(F.broadcast(fr), "src", "left_semi")
-            src_labels = F.broadcast(src_labels.join(F.broadcast(fr), "src"))
+            active = e.join(F.broadcast(front), "src", "left_semi")
+            src_labels = F.broadcast(src_labels.join(F.broadcast(front), "src"))
         else:
             active = e
             if size < num_verts:
-                src_labels = src_labels.join(
-                    front.select(F.col("id").alias("src")), "src", "left_semi"
-                )
+                src_labels = src_labels.join(front, "src", "left_semi")
             if big_v:
                 src_labels = src_labels.hint("shuffle_hash")
         return (
@@ -102,21 +98,16 @@ def _fw_bw_fixpoint(
             .agg(F.min("lab").alias(f"{tag}cand"))
         )
 
-    for rnd in range(max_iters):
+    def step(state: DataFrame, rnd: int) -> DataFrame:
         joined = state
-        if not f_done:
-            joined = joined.join(
-                gather(edges, "flab", ffront, fsize, "f"), "id", "left"
-            )
-        if not b_done:
-            joined = joined.join(
-                gather(tedges, "blab", bfront, bsize, "b"), "id", "left"
-            )
+        for labcol, e, tag in (("flab", edges, "f"), ("blab", tedges, "b")):
+            if sizes[labcol] > 0:
+                joined = joined.join(gather(state, e, labcol, tag), "id", "left")
         # gather step: fold the edge candidates into the labels, keep
         # the round's starting labels for the change test after jumps
         gcols = [F.col("id")]
-        for done, labcol, tag in ((f_done, "flab", "f"), (b_done, "blab", "b")):
-            if done:
+        for labcol, tag in (("flab", "f"), ("blab", "b")):
+            if sizes[labcol] == 0:
                 gcols += [F.col(labcol), F.col(labcol).alias(f"o{labcol}")]
             else:
                 cand = F.coalesce(f"{tag}cand", F.col(labcol))
@@ -145,8 +136,8 @@ def _fw_bw_fixpoint(
         # direction skips its jump.
         jumping = rnd >= _JUMP_FROM
         jcols = [F.col("id"), F.col("oflab"), F.col("oblab")]
-        for done, labcol in ((f_done, "flab"), (b_done, "blab")):
-            if done or not jumping:
+        for labcol in ("flab", "blab"):
+            if sizes[labcol] == 0 or not jumping:
                 jcols.append(F.col(labcol))
             else:
                 jmp = gath.filter(
@@ -164,32 +155,27 @@ def _fw_bw_fixpoint(
                         F.coalesce(f"j_{labcol}", F.col(labcol)),
                     ).alias(labcol)
                 )
-        new_state = (
-            gath.select(*jcols)
-            .select(
-                "id",
-                "flab",
-                "blab",
-                (F.col("flab") < F.col("oflab")).alias("fchg"),
-                (F.col("blab") < F.col("oblab")).alias("bchg"),
-            )
-            .transform(fresh_checkpoint)
+        return gath.select(*jcols).select(
+            "id",
+            "flab",
+            "blab",
+            (F.col("flab") < F.col("oflab")).alias("fchg"),
+            (F.col("blab") < F.col("oblab")).alias("bchg"),
         )
-        row = new_state.agg(
+
+    def changed(state: DataFrame) -> int:
+        row = state.agg(
             F.sum(F.col("fchg").cast("int")).alias("fc"),
             F.sum(F.col("bchg").cast("int")).alias("bc"),
         ).collect()[0]
-        fsize, bsize = int(row["fc"] or 0), int(row["bc"] or 0)
-        prev.unpersist()
-        prev = new_state
-        state = new_state.select("id", "flab", "blab")
-        ffront = new_state.filter("fchg").select("id")
-        bfront = new_state.filter("bchg").select("id")
-        f_done = f_done or fsize == 0
-        b_done = b_done or bsize == 0
-        if f_done and b_done:
-            return state, True
-    return state, f_done and b_done
+        sizes["flab"], sizes["blab"] = int(row["fc"] or 0), int(row["bc"] or 0)
+        return sizes["flab"] + sizes["blab"]
+
+    init = verts.select(
+        "id", F.col("id").alias("flab"), F.col("id").alias("blab"),
+        F.lit(True).alias("fchg"), F.lit(True).alias("bchg"),
+    )
+    return iterate(step, init, range(max_iters), measure=changed)
 
 
 def strongly_connected_components(
@@ -243,32 +229,26 @@ def strongly_connected_components(
         .select("id", F.lit(0).cast("long").alias("pk"))
         .transform(fresh_checkpoint)
     )
-    edges = graph.edges.select("src", "dst").transform(fresh_checkpoint)
+    # lazy: the loop's first count materializes it
+    edges = fresh_checkpoint(graph.edges.select("src", "dst"), eager=False)
+    cedges = edges
     n_active = graph.num_vertices
     assigned_parts: list[DataFrame] = []
     outer = 0
-    first = True
     while n_active > 0:
         num_edges = edges.count()
-        if num_edges == 0:
-            # edgeless residue: every remaining vertex is a trivial SCC
-            assigned_parts.append(
-                verts.select("id", F.col("id").alias("scc"))
-            )
-            verts = None
-            n_active = 0
-            break
-        if max_outer is not None and outer >= max_outer:
+        if num_edges and max_outer is not None and outer >= max_outer:
             raise RuntimeError(
                 f"SCC did not finish within max_outer={max_outer} rounds "
                 f"({n_active} vertices unassigned)"
             )
         big_v = n_active > 500_000
-        if first:
-            # single class — the unrestricted residual IS the class
+        if outer == 0 or num_edges == 0:
+            # a single class (or no edges left): the residual IS the
+            # class-restricted graph
             cedges, num_cedges = edges, num_edges
         else:
-            cedges = (
+            cedges = fresh_checkpoint(
                 edges.join(
                     verts.select(
                         F.col("id").alias("src"), F.col("pk").alias("pks")
@@ -282,30 +262,27 @@ def strongly_connected_components(
                     "dst",
                 )
                 .filter(F.col("pks") == F.col("pkd"))
-                .select("src", "dst")
-                .transform(fresh_checkpoint)
+                .select("src", "dst"),
+                eager=False,
             )
-            num_cedges = cedges.count()
+            num_cedges = cedges.count()  # materializes cedges
         if num_cedges == 0:
             # no intra-class edges anywhere: every remaining vertex is
             # a trivial SCC (an SCC never spans classes)
             assigned_parts.append(
                 verts.select("id", F.col("id").alias("scc"))
+                .transform(fresh_checkpoint)
             )
-            if cedges is not edges:
-                cedges.unpersist()
-            verts.unpersist()
-            verts = None
-            n_active = 0
             break
         tedges = cedges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        labs, converged = _fw_bw_fixpoint(
+        fix = _fw_bw_fixpoint(
             cedges, tedges, verts.select("id"), num_cedges, n_active,
             big_v, max_prop,
         )
-        if not converged:
+        labs = fix.state
+        if not fix.converged:
             labs.unpersist()
             raise RuntimeError(
                 f"SCC fixpoint did not converge within max_prop={max_prop} "
@@ -336,9 +313,7 @@ def strongly_connected_components(
             .select("src", "dst")
             .transform(fresh_checkpoint)
         )
-        if cedges is not edges:
-            cedges.unpersist()
-        for df in (verts, edges, labs):
+        for df in (cedges, verts, edges, labs):
             df.unpersist()
         verts, edges = new_verts, new_edges
         prev_active = n_active
@@ -352,19 +327,13 @@ def strongly_connected_components(
                 f"({n_active} vertices unassigned)"
             )
         outer += 1
-        first = False
-    if edges is not None:
-        edges.unpersist()
-    if verts is not None:
-        verts.unpersist()
+    for df in (cedges, edges, verts):
+        df.unpersist()
     if own_cache:
         graph.unpersist()
     if metrics_out is not None:
         metrics_out["outer_rounds"] = outer
-    out = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    return union_checkpoints(assigned_parts)
 
 
 def condensation_layers(

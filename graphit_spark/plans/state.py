@@ -41,15 +41,22 @@ a localCheckpointed frame — stripped or not — only touches the SQL
 cacheManager and is a NO-OP for the checkpoint's RDD blocks; the blocks
 otherwise linger until the JVM ContextCleaner garbage-collects the RDD
 (async, unbounded lag under driver memory pressure — the exact moment
-you need the release). The kernels' ``prev.unpersist()`` discipline
-therefore only worked by GC luck. ``fresh_checkpoint`` now captures the
+you need the release). ``fresh_checkpoint`` therefore captures the
 persisted RDD (``LogicalRDD.rdd()``) and binds an instance-level
-``unpersist`` on the returned frame that unpersists THAT RDD — every
-existing call site becomes a real, immediate release. Releasing a
-localCheckpointed RDD makes it unrecomputable (Spark logs a warning we
-silence once), which is exactly the contract: kernels release only
-SUPERSEDED state, and every consumer of live state holds an EAGER
-checkpoint of its own.
+``unpersist`` on the returned frame that unpersists THAT RDD — a real,
+immediate release, but only through that very frame: ``unpersist()`` on
+a frame derived from it (a select, a filter) is still the no-op above.
+Releasing a localCheckpointed RDD makes it unrecomputable (Spark logs a
+warning we silence once), which is exactly the contract: only
+SUPERSEDED state is released, and every consumer of live state holds
+a checkpoint of its own, materialized before anything it was computed
+from is released. A lazy checkpoint (``eager=False``) is materialized
+by the first action that reads all of it — a round's convergence
+count — which saves the separate materializing job. For round state
+that release lives in one place, the superstep driver
+(``plans/fixpoint.iterate``): it keeps the bound frame of every round
+and releases it once the next round's checkpoint is materialized, so
+no kernel loop releases state by hand.
 """
 
 from __future__ import annotations
@@ -77,14 +84,17 @@ def _silence_unpersist_warning(spark) -> None:
         pass
 
 
-def fresh_checkpoint(df: DataFrame) -> DataFrame:
+def fresh_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """localCheckpoint(eager) + strip inherited Statistics.
 
     Drop-in replacement for ``df.localCheckpoint(eager=True)`` in
     fixpoint loops. Returns a DataFrame over the checkpointed RDD whose
     stats do not compound across rounds (see module docstring), and
-    whose ``unpersist()`` actually frees the checkpoint's blocks."""
-    ck = df.localCheckpoint(eager=True)
+    whose ``unpersist()`` actually frees the checkpoint's blocks.
+    ``eager=False`` leaves the blocks to the first action that reads
+    every partition (it caches them and truncates the lineage as it
+    goes), saving the materializing job when such an action follows."""
+    ck = df.localCheckpoint(eager=eager)
     try:
         spark = ck.sparkSession
         jdf = ck._jdf
@@ -105,4 +115,23 @@ def fresh_checkpoint(df: DataFrame) -> DataFrame:
         return out
 
     out.unpersist = _unpersist
+    return out
+
+
+def union_checkpoints(parts: list[DataFrame]) -> DataFrame:
+    """unionByName of ``fresh_checkpoint`` frames, whose ``unpersist()``
+    releases every part (a result assembled from per-round parts stays
+    releasable by its consumer)."""
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    if len(parts) > 1:
+        releases = [part.unpersist for part in parts]
+
+        def _unpersist(blocking: bool = False):
+            for release in releases:
+                release(blocking)
+            return out
+
+        out.unpersist = _unpersist
     return out
